@@ -140,7 +140,8 @@ object Materialized {
 
   /** The memo's PRODUCTION face: materialize the intermediate as a
     * parquet table under `base` once per corpus snapshot, then serve
-    * every consumer `spark.read.parquet` of the sink. This is the
+    * every consumer a parquet read of the sink ([[Tables.read]], which
+    * infers the sink's schema once, not once per consumer). This is the
     * contract a 100 TB run actually uses — the pair table / CC
     * closure must survive the session (and be shareable across jobs,
     * clusters, days), which executor-resident checkpoint blocks
@@ -186,7 +187,7 @@ object Materialized {
     val path = sinkPath(dir, kind, base)
     val cell = sinks.computeIfAbsent(path, p => new SinkCell(p, () => build))
     cell.ensureWritten(spark)
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   private def sinkPath(dir: String, kind: String, base: String): String = {
